@@ -977,6 +977,13 @@ object TableCommit {
       .withColumn("__graft_dvp", col("_metadata").getField("row_index"))
   }
 
+  /** `table/rel` as a Hadoop path: scheme-bearing table roots go to
+    * Hadoop as-is (object-store adapters), plain local paths through
+    * the File URI (exact resolution for relative roots). */
+  private def hadoopPathOf(table: String, rel: String): org.apache.hadoop.fs.Path =
+    if (table.contains("://")) new org.apache.hadoop.fs.Path(s"$table/$rel")
+    else new org.apache.hadoop.fs.Path(new java.io.File(table, rel).toURI)
+
   /** One file rel path's POSSIBLE key renderings on both sides of the
     * DV machinery: the decoded manifest form, its `java.net.URI`
     * percent-encoding (what a writer's `_metadata.file_path` recorded),
@@ -986,14 +993,8 @@ object TableCommit {
     * key lookup immune to which rendering a side happens to carry. */
   private def dvKeyRenderings(table: String, rel: String): Seq[String] = {
     val segsN = depthOf(rel) + 1
-    val hadoopForm = scala.util.Try {
-      val p =
-        if (table.contains("://"))
-          new org.apache.hadoop.fs.Path(s"$table/$rel")
-        else new org.apache.hadoop.fs.Path(
-          new java.io.File(table, rel).toURI)
-      p.toString.split('/').takeRight(segsN).mkString("/")
-    }.toOption
+    val hadoopForm = scala.util.Try(hadoopPathOf(table, rel).toString
+      .split('/').takeRight(segsN).mkString("/")).toOption
     (Seq(rel, uriRendered(rel)) ++ hadoopForm).distinct
   }
 
@@ -1061,23 +1062,22 @@ object TableCommit {
         Map[String, Array[Array[Byte]]]],
       keepDead: Boolean) extends ((String, Long) => Boolean)
       with Serializable {
+    // per file key, resolved once per task: its merged kill set
+    // (empty when no vector covers the file)
     @transient private lazy val decoded =
       new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
-    override def apply(k: String, pos: Long): Boolean = {
+    private def deadOf(k: String): Array[Long] = {
       val m = bc.value
       val blobs = m.getOrElse(k,
         m.getOrElse(scala.util.Try(
           java.net.URLDecoder.decode(k, "UTF-8")).getOrElse(k), null))
-      if (blobs == null) !keepDead
-      else {
-        var dead = decoded.get(k)
-        if (dead == null) {
-          dead = DvCodec.mergeDecoded(blobs.toSeq)
-          decoded.put(k, dead)
-        }
-        val hit = java.util.Arrays.binarySearch(dead, pos) >= 0
-        if (keepDead) hit else !hit
-      }
+      if (blobs == null) Array.emptyLongArray
+      else DvCodec.mergeDecoded(blobs.toSeq)
+    }
+    override def apply(k: String, pos: Long): Boolean = {
+      val dead = decoded.computeIfAbsent(k, key => deadOf(key))
+      val hit = java.util.Arrays.binarySearch(dead, pos) >= 0
+      if (keepDead) hit else !hit
     }
   }
 
@@ -1090,7 +1090,7 @@ object TableCommit {
   private def dvFilterCol(s: SparkSession, table: String,
       dv: Map[String, Seq[String]], files: Seq[String],
       keepDead: Boolean): Option[org.apache.spark.sql.Column] = {
-    val blobs = dvBlobsOf(s, table, dv, files)
+    val blobs = dvBlobsOf(table, dv, files)
     if (blobs.isEmpty) None
     else {
       val byKey: Map[String, Array[Array[Byte]]] = blobs.toSeq.flatMap {
@@ -2808,17 +2808,6 @@ object TableCommit {
     * signature) — the connector's dir-vs-payload dispatch. */
   private[graft] def layoutSigOf(rel: String): Seq[String] = layoutSig(rel)
 
-  /** Deletion-vector BLOBS for an explicit file subset, decoded
-    * driver-side to GDV2 blobs (legacy v1 position dirs re-encode):
-    * file rel-path → the blobs of every vector covering it, in
-    * registration order. Cost ∝ the COMPRESSED vector bytes of the
-    * requested files — the same metadata cost class as every other DV
-    * read; the connector ships each input partition only its own
-    * files' blobs. */
-  private[graft] def dvBlobsFor(s: SparkSession, table: String,
-      meta: ScanMeta, files: Seq[String]): Map[String, Seq[Array[Byte]]] =
-    dvBlobsOf(s, table, meta.dv, files)
-
   /** The `_metadata.file_path` URI percent-encoding of a manifest rel
     * path — the rendering a DV writer's recorded keys carry. */
   private def uriRendered(rel: String): String = scala.util.Try(
@@ -2826,73 +2815,91 @@ object TableCommit {
       .stripPrefix("/")).getOrElse(rel)
 
   /** Test observability: the vector dirs the most recent [[dvBlobsOf]]
-    * call actually read — the witness that a pruned read never opens a
-    * pruned-out file's sidecar (the `inputFiles` probe the old
-    * join-based plan offered is gone with the join arm). */
+    * call requested — the witness that a pruned read never asks for a
+    * pruned-out file's sidecar. */
   private[graft] val lastDvDirsRead =
     new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
 
-  private def dvBlobsOf(s: SparkSession, table: String,
-      dv: Map[String, Seq[String]], files: Seq[String])
-      : Map[String, Seq[Array[Byte]]] = {
+  /** Loaded vector trees, (table, dir) → (key → compressed blob, cost),
+    * least recently used first, under a fixed byte budget. Trees are
+    * write-once (PROTOCOL.md §10), so an entry stays exact while its
+    * tree exists; vacuum's tree sweep and table drops evict it. */
+  private val DvMemoBytes = 64L << 20
+  private val dvMemo = new java.util.LinkedHashMap[(String, String),
+    (Map[String, Array[Byte]], Long)](16, 0.75f, true)
+  private var dvMemoUsed = 0L
+
+  /** Evict the memoized trees of every table at or under the path
+    * `root`: a table drop, a namespace drop, or a vacuum tree sweep. */
+  private[graft] def forgetDvTrees(root: String): Unit = dvMemo.synchronized {
+    dvMemo.entrySet().removeIf { e =>
+      val t = e.getKey._1
+      val hit = t == root || t.startsWith(root + "/")
+      if (hit) dvMemoUsed -= e.getValue._2
+      hit
+    }
+  }
+
+  /** Test observability: the dirs of `table` the memo holds. */
+  private[graft] def dvTreesMemoized(table: String): Set[String] =
+    dvMemo.synchronized(dvMemo.keySet().toArray(Array.empty[(String, String)]))
+      .collect { case (`table`, d) => d }.toSet
+
+  /** One vector tree, key → compressed blob: memoized, else read
+    * DRIVER-SIDE with parquet-hadoop (no Spark job). v2 trees hold the
+    * canonical blobs; v1 `(k, pos)` rows re-encode through the same
+    * codec. dv keys carry the writer's `_metadata` URI rendering,
+    * which percent-encodes special path characters, while manifest rel
+    * paths are decoded — so each key is also indexed under its decoded
+    * twin, exactly as the hit-count readers do. */
+  private def dvTree(table: String, dir: String): Map[String, Array[Byte]] =
+    dvMemo.synchronized(Option(dvMemo.get((table, dir)))).map(_._1).getOrElse {
+      val conf = new org.apache.hadoop.conf.Configuration()
+      val parts = TableStore.forTable(table).listFilesUnder(table, dir)
+        .filter(_.endsWith(".parquet"))
+      // Spark writes a part file even for no rows: an empty listing is
+      // a lost tree, and reading on would resurrect its deleted rows
+      require(parts.nonEmpty, s"deletion-vector tree $table/$dir is missing")
+      val rows = parts.flatMap { rel =>
+        val r = org.apache.parquet.hadoop.ParquetReader.builder(
+          new org.apache.parquet.hadoop.example.GroupReadSupport(),
+          hadoopPathOf(table, rel)).withConf(conf).build()
+        try Iterator.continually(r.read()).takeWhile(_ != null).toList
+        finally r.close()
+      }
+      val raw: Map[String, Array[Byte]] =
+        if (dir.endsWith(".v2"))
+          rows.map(g => g.getString("k", 0) -> g.getBinary("bmp", 0).getBytes).toMap
+        else rows.groupMap(_.getString("k", 0))(_.getLong("pos", 0))
+          .map { case (k, ps) => k -> DvCodec.encode(ps.toArray) }
+      val tree = raw.map { case (k, b) => scala.util.Try(
+        java.net.URLDecoder.decode(k, "UTF-8")).getOrElse(k) -> b } ++ raw
+      val cost = tree.iterator.map(e => e._1.length * 2L + e._2.length + 64L).sum
+      if (cost <= DvMemoBytes) dvMemo.synchronized {
+        dvMemoUsed += cost -
+          Option(dvMemo.put((table, dir), (tree, cost))).fold(0L)(_._2)
+        val it = dvMemo.values().iterator()
+        while (dvMemoUsed > DvMemoBytes) { dvMemoUsed -= it.next()._2; it.remove() }
+      }
+      tree
+    }
+
+  /** Deletion-vector BLOBS for an explicit file subset under the
+    * file → dirs registry `dv`, as GDV2 blobs (legacy v1 position dirs
+    * re-encode): file rel-path → the blobs of every vector covering
+    * it, in registration order. Metadata-sized and driver-side: each
+    * covering tree loads once ([[dvTree]]); the connector ships each
+    * input partition only its own files' blobs. */
+  private[graft] def dvBlobsOf(table: String, dv: Map[String, Seq[String]],
+      files: Seq[String]): Map[String, Seq[Array[Byte]]] = {
     val want = files.toSet
     val perFile = dv.filter { case (rel, _) => want(rel) }
     if (perFile.isEmpty) return Map.empty
-    // a SELECTIVE scan must pay only for the vectors of the files it
-    // requests: push `k IN (requested rels)` into the vector-dir read,
-    // under BOTH key renderings a writer may have recorded (the raw
-    // rel, and its _metadata URI percent-encoding)
-    val wantedKeys = perFile.keysIterator
-      .flatMap(rel => Seq(rel, uriRendered(rel))).toSeq.distinct
-    def loadDir(dir: String, selective: Boolean)
-        : Map[(String, String), Array[Byte]] = {
-      val base = s.read.parquet(s"$table/$dir")
-      val scoped =
-        if (selective) base.filter(col("k").isin(wantedKeys: _*)) else base
-      // v2 dirs already hold the canonical blobs; v1 dirs re-encode
-      // their plain position rows through the same codec
-      if (dir.endsWith(".v2"))
-        scoped.select(col("k"), col("bmp")).collect().map(r =>
-          (dir, r.getString(0)) -> r.getAs[Array[Byte]](1)).toMap
-      else
-        scoped.groupBy(col("k"))
-          .agg(org.apache.spark.sql.functions.collect_list(col("pos"))
-            .as("ps"))
-          .collect().map(r =>
-            (dir, r.getString(0)) ->
-              DvCodec.encode(r.getSeq[Long](1).toArray)).toMap
-    }
     val dirs = perFile.values.flatten.toSeq.distinct.sorted
     lastDvDirsRead.set(dirs)
-    var all: Map[(String, String), Array[Byte]] =
-      dirs.map(loadDir(_, selective = true))
-        .foldLeft(Map.empty[(String, String), Array[Byte]])(_ ++ _)
-    // dv keys carry the writer's _metadata URI rendering, which
-    // percent-encodes special path characters; the manifest rel paths
-    // are decoded — index the decoded twin exactly as the hit-count
-    // readers do
-    def decodedOf(m: Map[(String, String), Array[Byte]]) =
-      m.map { case ((dir, k), b) =>
-        (dir, scala.util.Try(java.net.URLDecoder.decode(k, "UTF-8"))
-          .getOrElse(k)) -> b
-      }
-    var decoded = decodedOf(all)
-    // CORRECTNESS BACKSTOP: a registered (file, dir) pair whose key the
-    // selective IN predicate missed (a rendering this reader didn't
-    // anticipate) re-reads that dir IN FULL — over-reading is a cost,
-    // a missed blob would resurrect deleted rows
-    val missedDirs = perFile.toSeq.flatMap { case (rel, regDirs) =>
-      regDirs.filterNot(dir =>
-        all.contains((dir, rel)) || decoded.contains((dir, rel)))
-    }.distinct.sorted
-    if (missedDirs.nonEmpty) {
-      all = all ++ missedDirs.map(loadDir(_, selective = false))
-        .foldLeft(Map.empty[(String, String), Array[Byte]])(_ ++ _)
-      decoded = decodedOf(all)
-    }
+    val trees = dirs.map(d => d -> dvTree(table, d)).toMap
     perFile.map { case (rel, regDirs) =>
-      rel -> regDirs.flatMap(dir =>
-        all.get((dir, rel)).orElse(decoded.get((dir, rel))))
+      rel -> regDirs.flatMap(trees(_).get(rel))
     }.filter(_._2.nonEmpty)
   }
 
@@ -3864,15 +3871,8 @@ object TableCommit {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     val fs = rels.map { rel => Future { scala.concurrent.blocking {
-      // scheme-bearing table roots go to Hadoop as-is (object-store
-      // adapters); plain local paths through the File URI (exact
-      // resolution for relative roots)
-      val p = if (table.contains("://"))
-        new org.apache.hadoop.fs.Path(s"$table/$rel")
-      else new org.apache.hadoop.fs.Path(
-        new java.io.File(table, rel).toURI)
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        p, new org.apache.hadoop.conf.Configuration())
+        hadoopPathOf(table, rel), new org.apache.hadoop.conf.Configuration())
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try rel -> r.getRecordCount finally r.close()
     }}}
@@ -4037,12 +4037,8 @@ object TableCommit {
     // per file: Some(rows, per-col refined bounds) or None =
     // uncertifiable (any column)
     val fs = rels.map { rel => Future { scala.concurrent.blocking {
-      val p = if (table.contains("://"))
-        new org.apache.hadoop.fs.Path(s"$table/$rel")
-      else new org.apache.hadoop.fs.Path(
-        new java.io.File(table, rel).toURI)
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        p, new org.apache.hadoop.conf.Configuration())
+        hadoopPathOf(table, rel), new org.apache.hadoop.conf.Configuration())
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try {
         val rows = r.getRecordCount
@@ -4312,7 +4308,7 @@ object TableCommit {
     // computed straight from the compressed blobs (driver-side, cost ∝
     // vector bytes; no distributed read + shuffle for a per-file count)
     val dead: Map[String, Long] =
-      dvBlobsOf(s, table, m.dv, m.dv.keys.toSeq).map { case (rel, bs) =>
+      dvBlobsOf(table, m.dv, m.dv.keys.toSeq).map { case (rel, bs) =>
         rel -> DvCodec.mergeDecoded(bs).length.toLong
       }
     m.dv.keys.toSeq.sorted.map(f =>
@@ -5572,7 +5568,10 @@ object TableCommit {
     st.listSubdirs(table, "_dv")
       .filter { case (name, mtime) => !liveDv.contains(name) &&
         mtime < cutoff }
-      .foreach { case (name, _) => st.deleteTree(table, s"_dv/$name") }
+      .foreach { case (name, _) =>
+        st.deleteTree(table, s"_dv/$name")
+        forgetDvTrees(table)
+      }
     // writer-recorded change-data trees: referenced by RETAINED
     // snapshots' commit-scoped #cdc directives; the rest sweep once
     // stale (a feed consumer may lag at most the retention window —

@@ -451,6 +451,7 @@ final class S3SemanticsStore(pageSize: Int = 7) extends TableStore {
   def dropTable(table: String): Unit = {
     val it = bucket.keySet().iterator()
     while (it.hasNext) if (it.next()._1 == table) it.remove()
+    TableCommit.forgetDvTrees(table)
     Option(spool.toFile.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith(
         s"ckpt-${CheckpointSidecar.identityDigest(table)}-"))
@@ -513,6 +514,7 @@ final class ConditionalPutStore(underlying: TableStore = TableStore.local)
   def dropTable(table: String): Unit = {
     val it = manifests.keySet().iterator()
     while (it.hasNext) if (it.next()._1 == table) it.remove()
+    TableCommit.forgetDvTrees(table)
   }
 
   override def listFilesUnder(table: String, relDir: String): Seq[String] =

@@ -205,6 +205,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     // catalog must never tell)
     if (existed)
       graft.operators.TableStore.forTable(path).deleteTree(path, "")
+    TableCommit.forgetDvTrees(path)
     existed
   }
 
@@ -308,6 +309,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
         .exists(_._1 == namespace.last) || new java.io.File(dir).isDirectory
       if (existed)
         graft.operators.TableStore.forTable(dir).deleteTree(dir, "")
+      TableCommit.forgetDvTrees(dir)
       existed
     } else {
       requireLocalWarehouse("DROP NAMESPACE", w)

@@ -533,7 +533,7 @@ class GraftScan(path: String, meta: TableCommit.ScanMeta,
     * partitions over a SUBSET of keptFiles, and re-collecting the
     * vector dirs for it would pay the driver read twice. */
   private lazy val dvForKept: Map[String, Seq[Array[Byte]]] =
-    TableCommit.dvBlobsFor(session, path, meta, keptFiles)
+    TableCommit.dvBlobsOf(path, meta.dv, keptFiles)
 
   private def buildPartitions(files: Seq[String]): Array[InputPartition] = {
     val groupIdx = sigGroups.zipWithIndex.toMap

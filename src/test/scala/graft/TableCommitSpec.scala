@@ -1294,6 +1294,128 @@ class TableCommitSpec extends GraftSpec {
         s"pushed=$pushed\n${plan.take(3000)}")
   }
 
+  /** Spark jobs started per job group while `phases` run in order: each
+    * phase runs under its own group, and a final flush job drains the
+    * asynchronous listener bus before the counts are read. */
+  private def jobsPerPhase(phases: (String, () => Unit)*): Map[String, Int] = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(l)
+    try {
+      val flush = () => { sc.parallelize(Seq(1), 1).count(); () }
+      (phases :+ ("flush" -> flush)).foreach { case (g, f) =>
+        sc.setJobGroup(g, g)
+        try f() finally sc.clearJobGroup()
+      }
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!groups.contains("flush") && System.nanoTime() < deadline)
+        Thread.sleep(5)
+      assert(groups.contains("flush"), "listener bus never drained")
+      groups.toArray(Array.empty[String]).toSeq
+        .groupBy(identity).map { case (g, v) => g -> v.length }
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("deletion vectors load driver-side, once per vector dir: a read " +
+      "over two v2 vectors and one v1 vector starts no Spark job before " +
+      "its scan, on the DataFrame path and through catalog SQL, and a " +
+      "second read of the snapshot opens no vector file") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_dvjobs").toFile
+      .getAbsolutePath
+    graft.plans.GraftCatalog.register(spark, "dvjobs", Some(wh))
+    val t = s"$wh/db/t"
+    TableCommit.appendRowsBy(spark, t, Seq("pt"),
+      (0 until 300).map(i => (i.toLong, s"v$i", i % 3)).toDF("id", "v", "pt"),
+      clusterBy = Seq("id"))
+    TableCommit.setProperties(t, Map("graft.retention.generations" -> "8"))
+    TableCommit.deleteWhereMor(spark, t, "pt", "id",
+      BigDecimal(10), BigDecimal(19))
+    TableCommit.deleteWhereMor(spark, t, "pt", "id",
+      BigDecimal(100), BigDecimal(119))
+    TableCommit.setProperties(t, Map("graft.dv.format" -> "v1"))
+    TableCommit.deleteWhereMor(spark, t, "pt", "id",
+      BigDecimal(200), BigDecimal(204))
+    val dirs = new java.io.File(t, "_dv").list().toSeq
+    assert(dirs.count(_.endsWith(".v2")) == 2 &&
+      dirs.count(!_.endsWith(".v2")) == 1, s"vector dirs: $dirs")
+    val dead = ((10 to 19) ++ (100 to 119) ++ (200 to 204)).map(_.toLong)
+    val want = (0L to 249L).toSet -- dead
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select(col("id")).collect().map(_.getLong(0)).toSet
+    def frame() =
+      TableCommit.readWhere(spark, t, "id", BigDecimal(0), BigDecimal(249))
+    val sql = "SELECT id FROM dvjobs.db.t WHERE id <= 249"
+    var df: org.apache.spark.sql.DataFrame = null
+    var got, gotSql = Set.empty[Long]
+    val jobs = jobsPerPhase(
+      "plan" -> (() => df = frame()),
+      "scan" -> (() => got = ids(df)),
+      "sql" -> (() => gotSql = ids(spark.sql(sql))))
+    assert(got == want, s"DataFrame read drift: ${got -- want} extra, " +
+      s"${want -- got} missing")
+    assert(gotSql == want, s"catalog read drift: ${gotSql -- want} " +
+      s"extra, ${want -- gotSql} missing")
+    assert(!jobs.contains("plan"),
+      s"building the read frame started Spark jobs: $jobs")
+    assert(jobs.get("scan").contains(1) && jobs.get("sql").contains(1),
+      s"a DV-covered read must run its scan's job only: $jobs")
+    // vector trees are write-once: a second read of the snapshot is
+    // served from memory — with the trees moved away it cannot open one
+    val dvRoot = new java.io.File(t, "_dv")
+    val parked = new java.io.File(t, "_dv_parked")
+    assert(dvRoot.renameTo(parked))
+    try assert(ids(frame()) == want && ids(spark.sql(sql)) == want,
+      "a second read of the same snapshot re-opened vector files")
+    finally assert(parked.renameTo(dvRoot))
+  }
+
+  test("the vector-tree memo follows its table: DROP TABLE and vacuum's " +
+      "tree sweep evict, and a table re-created at a dropped path reads " +
+      "only its own vectors") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_dvmemo").toFile
+      .getAbsolutePath
+    graft.plans.GraftCatalog.register(spark, "dvmemo", Some(wh))
+    val t = s"$wh/db/t"
+    def seed(): Unit = TableCommit.appendRowsBy(spark, t, Seq("pt"),
+      (0 until 90).map(i => (i.toLong, s"v$i", i % 3)).toDF("id", "v", "pt"),
+      clusterBy = Seq("id"))
+    def ids(): Set[Long] = spark.sql("SELECT id FROM dvmemo.db.t")
+      .collect().map(_.getLong(0)).toSet
+    seed()
+    TableCommit.deleteWhereMor(spark, t, "pt", "id", BigDecimal(0), BigDecimal(9))
+    assert(ids() == (10L until 90L).toSet)
+    assert(TableCommit.dvTreesMemoized(t).size == 1)
+    spark.sql("DROP TABLE dvmemo.db.t")
+    assert(TableCommit.dvTreesMemoized(t).isEmpty,
+      "DROP TABLE left the table's vector trees memoized")
+    seed()
+    TableCommit.deleteWhereMor(spark, t, "pt", "id",
+      BigDecimal(50), BigDecimal(59))
+    assert(ids() == (0L until 90L).toSet -- (50L to 59L),
+      "the re-created table read vectors it does not register")
+    val Seq(dir) = TableCommit.dvTreesMemoized(t).toSeq
+    // compaction rewrites through the vector, one more commit ages the
+    // vectored snapshot out of retention, and the aged tree sweeps
+    TableCommit.compactPartitionsBy(spark, t, Seq("pt"),
+      Seq("pt=0", "pt=1", "pt=2"))
+    TableCommit.appendRowsBy(spark, t, Seq("pt"),
+      Seq((1000L, "x", 0)).toDF("id", "v", "pt"))
+    new java.io.File(t, dir)
+      .setLastModified(System.currentTimeMillis() - 2L * 60 * 60 * 1000)
+    TableCommit.vacuumRun(t)
+    assert(!new java.io.File(t, dir).exists(), s"$dir was not swept")
+    assert(TableCommit.dvTreesMemoized(t).isEmpty,
+      s"vacuum swept $dir but left it memoized")
+    assert(ids() == (0L until 90L).toSet -- (50L to 59L) + 1000L)
+  }
+
   test("dense-kill MoR read: a vector marking ~1M dead rows of one file " +
       "applies as a bitmap filter — correct live set, no join arm, " +
       "and the sidecar stays compressed (bitmap containers, not a row " +
